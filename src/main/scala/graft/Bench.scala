@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.{Baskets, Dedup, Govern, Multimodal, Pref, Similarity, SpanExact, TextAnalysis}
 
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -11,17 +12,106 @@ import org.apache.spark.sql.SparkSession
   * billed to whichever query happens to run first.
   */
 object Bench {
+
+  /** A session-shared materialized intermediate: when any of
+    * `consumers` is selected, `build` runs up front and is billed as
+    * its own entry `name`, so the consumers measure their incremental
+    * cost instead of whichever sorts first silently absorbing the
+    * build. The build is what a production pipeline materializes once
+    * per corpus; every consumer then scans it.
+    */
+  private[graft] final case class SharedBuild(name: String,
+      consumers: Set[String], build: (SparkSession, String) => DataFrame)
+
+  // consumers of the near-dup pair list: the whole jaccard family
+  private val jaccardFamily = Set("q_ngram_jaccard", "q_dedup_components",
+    "q_cc_sizes", "q_dedup_canonical", "q_triangles", "q_pagerank",
+    "q_pagerank_step", "q_prep_pipeline", "q_kcore", "q_lsh_recall",
+    "q_dedup_aware_split", "q_leakage_guard", "q_crossmodal_dedup",
+    "q_dup_rate_by_source", "q_simhash_recall", "q_dedup_apply",
+    "q_softdedup", "q_dup_assortativity", "q_dedup_funnel",
+    "q_corpus_release")
+
+  // the ivf_probed/ivf_cand pair of ANN indexes share most consumers
+  private val annFamily = Set("q_sim_ann", "q_ann_recall", "q_ann_graph",
+    "q_ann_graph_recall", "q_ann_graph2", "q_ann_graph2_recall",
+    "q_knn_graph")
+
+  // the suffix-rank table and its fused group/adjacent-LCP pass
+  private val spanFamily = Set("q_span_dedup_exact", "q_dup_spectrum",
+    "q_contam_span", "q_decontam_span")
+
+  /** Every shared build, in execution order. */
+  private[graft] val sharedBuilds: Seq[SharedBuild] = Seq(
+    // the shingle postings layer BELOW the pair list (the pair-list
+    // build is one of its consumers); the theta family reads
+    // postings ⋈ source, and the release/contamination twins' stores
+    // are postings filters
+    SharedBuild("shared_shingle_postings", jaccardFamily ++ Set(
+      "q_dedup_minhash", "q_jaccard_prefix", "q_minhash_error",
+      "q_containment", "q_contamination", "q_ngram_novelty",
+      "q_release_delta", "q_theta_sketch", "q_theta_setops",
+      "q_theta_matrix", "q_theta_delta", "q_stream_theta_delta",
+      "q_stream_release", "q_stream_contamination"),
+      Dedup.sharedShinglePostings),
+    // per-doc bigram-LM perplexity: one tokenize+shingle+LM-train chain
+    SharedBuild("shared_perplexity", Set("q_lm_perplexity",
+      "q_perplexity_buckets", "q_doremi_step", "q_quality_ablate"),
+      TextAnalysis.sharedPerplexity),
+    // the BM25 score table for the fixed retrieval query
+    SharedBuild("shared_bm25",
+      Set("q_bm25", "q_rrf_fusion", "q_query_expansion"),
+      TextAnalysis.bm25Scores),
+    // the IVF probed-assignment table (the vector index)
+    SharedBuild("shared_ivf_probed", annFamily ++ Set(
+      "q_dedup_embedding_ivf", "q_ivf_pq_search", "q_label_propagation",
+      "q_bitext_mine", "q_contrastive_pairs", "q_semantic_outliers",
+      "q_cluster_balance", "q_embedding_drift", "q_ivf_retrain",
+      "q_stream_ivf_retrain"),
+      Similarity.sharedIvfProbed),
+    // the IVF candidate-pair edge list (the index's candidate output)
+    SharedBuild("shared_ivf_cand", annFamily, Similarity.sharedIvfCand),
+    // the full-corpus PQ code table (the stored PQ index)
+    SharedBuild("shared_pq_codes",
+      Set("q_pq_encode", "q_pq_search", "q_ivf_pq_search"),
+      Similarity.sharedPqCodes),
+    // the 16-byte-per-doc image hash table: one real-decode pass
+    SharedBuild("shared_phash", Set("q_image_phash", "q_crossmodal_dedup"),
+      Multimodal.sharedPhash),
+    // the DSIR log-weight table: one bigram explode + LM fit
+    SharedBuild("shared_dsir_logw",
+      Set("q_dsir", "q_dsir_apply", "q_corpus_release"),
+      TextAnalysis.dsirLogw),
+    // the SemDeDup cluster assignment: one n·K centroid pass
+    SharedBuild("shared_semdedup",
+      Set("q_semdedup", "q_dedup_funnel", "q_corpus_release"),
+      Similarity.sharedSemdedupAssigned),
+    // the banded MinHash est-pair table (the sketch index output)
+    SharedBuild("shared_minhash_pairs", Set("q_dedup_minhash",
+      "q_minhash_error", "q_lsh_recall", "q_release_delta"),
+      Dedup.sharedMinhashEstPairs),
+    SharedBuild("shared_span_sa", spanFamily, SpanExact.saRanks),
+    SharedBuild("shared_span_adj", spanFamily, SpanExact.saAdjacency),
+    // the per-source KMV sketch artifact shared by the theta legs
+    SharedBuild("shared_theta_sketch",
+      Set("q_theta_sketch", "q_theta_setops", "q_theta_matrix"),
+      Govern.sharedThetaSketches),
+    // the deterministic preference-pair table
+    SharedBuild("shared_pref_pairs", Set("q_pref_pairs", "q_arena_bt"),
+      Pref.prefPairs),
+    // the capped SimHash band table
+    SharedBuild("shared_simhash_bands",
+      Set("q_dedup_simhash", "q_simhash_recall"), Dedup.simhashLiveBands),
+    SharedBuild("shared_jaccard_pairs", jaccardFamily,
+      (s, d) => Dedup.sharedJaccardPairs(s, d, 0.6)),
+    // basket incidences
+    SharedBuild("shared_order_baskets", Set("q_assoc_rules"),
+      Baskets.orderItems),
+    SharedBuild("shared_cust_baskets", Set("q_cooccur"), Baskets.custItems))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.bench("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // Per-query shuffle-write volume — the "measure, don't guess"
@@ -233,254 +323,15 @@ object Bench {
         SparkEntry.queries.keys.toSeq
       else headline.filter(SparkEntry.queries.contains)
     val names = base.sorted.filter(n => only.forall(_.contains(n)))
-    // The near-dup pair list is a session-shared materialized
-    // intermediate (Dedup.sharedJaccardPairs) consumed by the whole
-    // jaccard family; build it up front and bill it as its OWN entry,
-    // so family queries measure their incremental cost instead of
-    // whichever one sorts first silently absorbing the ~40 s build.
-    val family = Set("q_ngram_jaccard", "q_dedup_components", "q_cc_sizes",
-      "q_dedup_canonical", "q_triangles", "q_pagerank", "q_pagerank_step",
-      "q_prep_pipeline", "q_kcore", "q_lsh_recall",
-      "q_dedup_aware_split", "q_leakage_guard", "q_crossmodal_dedup",
-      "q_dup_rate_by_source", "q_simhash_recall", "q_dedup_apply",
-      "q_softdedup", "q_dup_assortativity", "q_dedup_funnel",
-      "q_corpus_release")
-    // Consumers of the materialized postings layer BELOW the pair list
-    // (the pair-list build itself is one of them).
-    val postingsFamily = family ++ Set("q_dedup_minhash", "q_jaccard_prefix",
-      "q_minhash_error", "q_containment", "q_contamination",
-      "q_ngram_novelty", "q_release_delta",
-      // the theta family reads sourceShingles = postings ⋈ source, so
-      // the postings build must be billed up front, not inside
-      // shared_theta_sketch / the delta's sketch legs
-      "q_theta_sketch", "q_theta_setops", "q_theta_matrix",
-      "q_theta_delta", "q_stream_theta_delta",
-      // r14: the release twin's v1 stores and the contamination twin's
-      // eval index are postings-table filters now — same billing rule
-      "q_stream_release", "q_stream_contamination")
-    val sharedPostings: Seq[(String, Double)] =
-      if (names.exists(postingsFamily.contains)) {
-        val t = timed("shared_shingle_postings") {
-          graft.ops.Dedup.sharedShinglePostings(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_shingle_postings  $t%9.3f s")
-        Seq("shared_shingle_postings" -> t)
-      } else Seq.empty
-    // per-doc bigram-LM perplexity: one tokenize+shingle+LM-train
-    // chain shared by q_lm_perplexity and q_perplexity_buckets (was
-    // re-derived per consumer — the slowest bench entry twice over)
-    val perplexityFamily =
-      Set("q_lm_perplexity", "q_perplexity_buckets", "q_doremi_step",
-        "q_quality_ablate")
-    val sharedPerplexity: Seq[(String, Double)] =
-      if (names.exists(perplexityFamily.contains)) {
-        val t = timed("shared_perplexity") {
-          graft.ops.TextAnalysis.sharedPerplexity(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_perplexity        $t%9.3f s")
-        Seq("shared_perplexity" -> t)
-      } else Seq.empty
-    // the BM25 score table for the fixed retrieval query: one
-    // tokenize+explode pass shared by q_bm25, q_rrf_fusion, and
-    // q_query_expansion (whose feedback set is its top-FbDocs)
-    val bm25Family = Set("q_bm25", "q_rrf_fusion", "q_query_expansion")
-    val sharedBm25: Seq[(String, Double)] =
-      if (names.exists(bm25Family.contains)) {
-        val t = timed("shared_bm25") {
-          graft.ops.TextAnalysis.bm25Scores(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_bm25              $t%9.3f s")
-        Seq("shared_bm25" -> t)
-      } else Seq.empty
-    // the IVF probed-assignment table (the vector index): one
-    // quantizer-train + assign pass shared by the whole IVF family
-    val ivfFamily = Set("q_sim_ann", "q_ann_recall", "q_dedup_embedding_ivf",
-      "q_ivf_pq_search", "q_label_propagation", "q_bitext_mine",
-      "q_contrastive_pairs", "q_knn_graph", "q_semantic_outliers",
-      "q_cluster_balance", "q_embedding_drift",
-      "q_ivf_retrain", "q_stream_ivf_retrain",
-      "q_ann_graph", "q_ann_graph_recall",
-      "q_ann_graph2", "q_ann_graph2_recall")
-    val sharedIvf: Seq[(String, Double)] =
-      if (names.exists(ivfFamily.contains)) {
-        val t = timed("shared_ivf_probed") {
-          graft.functions.CosineSim.register(spark)
-          graft.ops.Similarity.sharedIvfProbed(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_ivf_probed        $t%9.3f s")
-        Seq("shared_ivf_probed" -> t)
-      } else Seq.empty
-    // the IVF candidate-pair edge list (the index's candidate output):
-    // one bucket self-join + cosine pass shared by the ANN family
-    val ivfCandFamily = Set("q_sim_ann", "q_ann_recall", "q_ann_graph",
-      "q_ann_graph_recall", "q_ann_graph2", "q_ann_graph2_recall",
-      "q_knn_graph")
-    val sharedIvfCand: Seq[(String, Double)] =
-      if (names.exists(ivfCandFamily.contains)) {
-        val t = timed("shared_ivf_cand") {
-          graft.ops.Similarity.sharedIvfCand(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_ivf_cand          $t%9.3f s")
-        Seq("shared_ivf_cand" -> t)
-      } else Seq.empty
-    // the full-corpus PQ code table (the stored PQ index): one
-    // quantize+encode pass shared by the PQ query family
-    val pqFamily = Set("q_pq_encode", "q_pq_search", "q_ivf_pq_search")
-    val sharedPq: Seq[(String, Double)] =
-      if (names.exists(pqFamily.contains)) {
-        val t = timed("shared_pq_codes") {
-          graft.ops.Similarity.sharedPqCodes(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_pq_codes          $t%9.3f s")
-        Seq("shared_pq_codes" -> t)
-      } else Seq.empty
-    // the 16-byte-per-doc image hash table: one real-decode pass
-    // shared by q_image_phash and q_crossmodal_dedup
-    val phashFamily = Set("q_image_phash", "q_crossmodal_dedup")
-    val sharedPhash: Seq[(String, Double)] =
-      if (names.exists(phashFamily.contains)) {
-        val t = timed("shared_phash") {
-          graft.ops.Multimodal.sharedPhash(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_phash             $t%9.3f s")
-        Seq("shared_phash" -> t)
-      } else Seq.empty
-    // the DSIR log-weight table: one bigram explode + LM fit shared by
-    // the score surface, the apply census, and the release capstone
-    val dsirFamily = Set("q_dsir", "q_dsir_apply", "q_corpus_release")
-    val sharedDsir: Seq[(String, Double)] =
-      if (names.exists(dsirFamily.contains)) {
-        val t = timed("shared_dsir_logw") {
-          graft.ops.TextAnalysis.dsirLogw(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_dsir_logw         $t%9.3f s")
-        Seq("shared_dsir_logw" -> t)
-      } else Seq.empty
-    // the SemDeDup cluster assignment: one n·K centroid pass shared by
-    // q_semdedup's self-join sides, the funnel's semantic stage, and
-    // the release capstone
-    val semFamily = Set("q_semdedup", "q_dedup_funnel", "q_corpus_release")
-    val sharedSem: Seq[(String, Double)] =
-      if (names.exists(semFamily.contains)) {
-        val t = timed("shared_semdedup") {
-          graft.functions.CosineSim.register(spark)
-          graft.ops.Similarity.sharedSemdedupAssigned(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_semdedup          $t%9.3f s")
-        Seq("shared_semdedup" -> t)
-      } else Seq.empty
-    // the banded MinHash est-pair table (the sketch index output):
-    // one signature + band self-join + estimate pass shared by the
-    // candidate query and both quality audits
-    val mhFamily = Set("q_dedup_minhash", "q_minhash_error", "q_lsh_recall",
-      "q_release_delta")
-    val sharedMh: Seq[(String, Double)] =
-      if (names.exists(mhFamily.contains)) {
-        val t = timed("shared_minhash_pairs") {
-          graft.ops.Dedup.sharedMinhashEstPairs(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_minhash_pairs     $t%9.3f s")
-        Seq("shared_minhash_pairs" -> t)
-      } else Seq.empty
-    // the suffix-rank table (7 prefix-doubling rounds): the stored
-    // index q_span_dedup_exact's census scans — billed separately so
-    // the query measures its incremental census cost (the build is
-    // what a production exact-dedup job materializes once per corpus)
-    val saFamily = Set("q_span_dedup_exact", "q_dup_spectrum", "q_contam_span",
-      "q_decontam_span")
-    val sharedSa: Seq[(String, Double)] =
-      if (names.exists(saFamily.contains)) {
-        val t = timed("shared_span_sa") {
-          graft.ops.SpanExact.saRanks(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_span_sa           $t%9.3f s")
-        // the fused group pass + adjacent-group LCP table — shared by
-        // the dup_len census AND the contamination chain (round-10)
-        val t2 = timed("shared_span_adj") {
-          graft.ops.SpanExact.saAdjacency(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_span_adj          $t2%9.3f s")
-        Seq("shared_span_sa" -> t, "shared_span_adj" -> t2)
-      } else Seq.empty
-    // the per-source KMV sketch artifact (round-11): one postings
-    // aggregate shared by all three theta sketch legs
-    val thetaFamily = Set("q_theta_sketch", "q_theta_setops",
-      "q_theta_matrix")
-    val sharedTheta: Seq[(String, Double)] =
-      if (names.exists(thetaFamily.contains)) {
-        val t = timed("shared_theta_sketch") {
-          graft.ops.Govern.sharedThetaSketches(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_theta_sketch      $t%9.3f s")
-        Seq("shared_theta_sketch" -> t)
-      } else Seq.empty
-    // the deterministic preference-pair table shared by the pair dump
-    // and the arena leaderboard (round-11 late)
-    val prefFamily = Set("q_pref_pairs", "q_arena_bt")
-    val sharedPref: Seq[(String, Double)] =
-      if (names.exists(prefFamily.contains)) {
-        val t = timed("shared_pref_pairs") {
-          graft.ops.Pref.prefPairs(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_pref_pairs        $t%9.3f s")
-        Seq("shared_pref_pairs" -> t)
-      } else Seq.empty
-    // the capped SimHash band table shared by the pair query and its
-    // recall audit
-    val shFamily = Set("q_dedup_simhash", "q_simhash_recall")
-    val sharedSh: Seq[(String, Double)] =
-      if (names.exists(shFamily.contains)) {
-        val t = timed("shared_simhash_bands") {
-          graft.ops.Dedup.simhashLiveBands(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_simhash_bands     $t%9.3f s")
-        Seq("shared_simhash_bands" -> t)
-      } else Seq.empty
-    val shared: Seq[(String, Double)] =
-      sharedPostings ++ sharedPerplexity ++ sharedBm25 ++ sharedIvf ++ sharedPq ++
-        sharedIvfCand ++ sharedPhash ++ sharedDsir ++ sharedSem ++
-        sharedMh ++ sharedSa ++ sharedTheta ++ sharedPref ++ sharedSh ++ (
-      if (names.exists(family.contains)) {
-        val t = timed("shared_jaccard_pairs") {
-          graft.ops.Dedup.sharedJaccardPairs(spark, sfDir, 0.6)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_jaccard_pairs     $t%9.3f s")
-        Seq("shared_jaccard_pairs" -> t)
-      } else Seq.empty) ++ (
-      // basket incidences: same discipline — build up front, bill as
-      // their own entries so the basket queries measure incremental cost
-      if (names.contains("q_assoc_rules")) {
-        val t = timed("shared_order_baskets") {
-          graft.ops.Baskets.orderItems(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_order_baskets     $t%9.3f s")
-        Seq("shared_order_baskets" -> t)
-      } else Seq.empty) ++ (
-      if (names.contains("q_cooccur")) {
-        val t = timed("shared_cust_baskets") {
-          graft.ops.Baskets.custItems(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        }
-        System.err.println(f"[bench] shared_cust_baskets      $t%9.3f s")
-        Seq("shared_cust_baskets" -> t)
-      } else Seq.empty)
+    // shared builds run first, each billed as its own entry (see
+    // [[sharedBuilds]])
+    val shared = sharedBuilds.filter(b => names.exists(b.consumers.contains)).map { b =>
+      val t = timed(b.name) {
+        b.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      System.err.println(f"[bench] ${b.name}%-24s $t%9.3f s")
+      b.name -> t
+    }
     val results = shared ++ names.map { n =>
       val t = materialize(n)
       System.err.println(f"[bench] $n%-24s $t%9.3f s")
@@ -525,7 +376,7 @@ object Bench {
         .filter { case (n, t) => t > threshold && !n.startsWith("shared_") }
         .sortBy(-_._2).take(24)
       if (!enabled || flagged.isEmpty) Seq.empty
-      else forkRepin(flagged, sfDir, cpus)
+      else forkRepin(flagged, sfDir, GraftSession.cpus(32))
     }
     // Driver contract: ONE JSON line, and it must survive a bounded
     // tail-capture of stdout (r01 AND r02 lost the line to truncation
@@ -606,7 +457,7 @@ object Bench {
     * line.
     */
   private def forkRepin(flaggedTimes: Seq[(String, Double)], sfDir: String,
-      cpus: String): Seq[(String, Double)] = {
+      cpus: Int): Seq[(String, Double)] = {
     val flagged = flaggedTimes.map(_._1)
     val cp = sys.props.getOrElse("java.class.path", "")
     if (!cp.contains("spark")) {
@@ -626,7 +477,7 @@ object Bench {
     pb.redirectOutput(cwd.resolve("repin.log").toFile)
     val env = pb.environment()
     env.put("SPARK_GRAFT_SF_DIR", sfDir)
-    env.put("SPARK_GRAFT_CPUS", cpus)
+    env.put("SPARK_GRAFT_CPUS", cpus.toString)
     env.put("SPARK_GRAFT_ONLY", flagged.mkString(","))
     env.put("SPARK_GRAFT_REPIN", "0")
     // the fork replays the flagged entries plus their shared index

@@ -35,4 +35,16 @@ object GraftSession {
       // just keeps direct spark.read callers on the same type).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .getOrCreate()
+
+  /** Local cores for a main: `SPARK_GRAFT_CPUS`, else `default`. */
+  private[graft] def cpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)
+
+  /** The bench config of record — `local[SPARK_GRAFT_CPUS or 32]` with
+    * 32 shuffle partitions — shared by `Bench`, `ProfileQuery` and
+    * `Explain`, so profiles and plan dumps come from the measured
+    * configuration.
+    */
+  private[graft] def bench(appName: String): SparkSession =
+    create(s"local[${cpus(32)}]", appName, 32)
 }

@@ -58,27 +58,18 @@ case class SessionOut(user_id: Long, sess_start: java.sql.Timestamp,
   */
 object Streams {
 
-  /** Stateful micro-batch drains pay a per-partition state-store cost
-    * every trigger (one store instance per shuffle partition), so a
-    * test-scale stream with 32 shuffle partitions spends more time
-    * opening/committing stores than processing rows. Right-size the
-    * state partitioning for the drain and restore the session setting
-    * after; production sizes this to stream volume (it is fixed at
-    * the FIRST start of a stateful query by the checkpoint anyway).
-    */
-  /** Conf override for [[StatePartitions]] — production sizes this to
-    * stream volume (shuffle partitions during a drain; a stateful
-    * query pins it into its checkpoint at first start).
+  /** Conf override for [[StatePartitions]], the shuffle partitions
+    * during a drain. Stateful micro-batch drains pay a per-partition
+    * state-store cost every trigger (one store instance per shuffle
+    * partition), so a test-scale stream with 32 shuffle partitions
+    * spends more time opening/committing stores than processing rows;
+    * the drain right-sizes the state partitioning and restores the
+    * session setting after. Production sizes this to stream volume (a
+    * stateful query pins it into its checkpoint at first start).
     */
   val StatePartitionsConf = "spark.graft.streaming.statePartitions"
 
   private val StatePartitions = 4
-
-  /** Conf override for the per-twin AQE choice during a drain (see
-    * [[withStatePartitions]]): unset = each twin's measured default;
-    * "true"/"false" forces AQE on/off for every drain.
-    */
-  val DrainAqeConf = "spark.graft.streaming.drainAqe"
 
   /** Largest micro-batch shingle-posting table (rows, two BIGINTs
     * each) the crossmodal ingest guard will broadcast as the probe
@@ -93,19 +84,14 @@ object Streams {
     * AQE history (measure, don't assume): round 8 tried AQE OFF
     * globally here and REVERTED it (q_stream_crossmodal regressed
     * 7.6 → 11.5 s on its then-current plan). Round 13 re-measured
-    * per-twin with an interleaved A/B (ProfileRelease harness, fresh
-    * work dir per rep, staging untimed): the release drain is 2.4 s
-    * FASTER with AQE off (median 8.2 vs 10.6 s — its per-trigger plan
-    * has 10+ tiny exchanges and each AQE stage materialization is an
-    * extra sequentially-scheduled job), crossmodal is now neutral-to-
-    * positive (7.5 vs 7.9 s — the r8 plan changed: pinned schemas,
-    * broadcast probe), and the theta twins are within noise. So the
-    * per-twin measured winner is the default, and
-    * [[DrainAqeConf]] overrides both ways. At production batch sizes
-    * AQE's coalescing matters again — a deployment sets
-    * `spark.graft.streaming.drainAqe=true` (and
-    * [[StatePartitionsConf]] to its stream volume) rather than
-    * inheriting the micro-batch-measured default.
+    * per-twin with an interleaved A/B (fresh work dir per rep, staging
+    * untimed): the release drain is 2.4 s FASTER with AQE off (median
+    * 8.2 vs 10.6 s — its per-trigger plan has 10+ tiny exchanges and
+    * each AQE stage materialization is an extra sequentially-scheduled
+    * job), crossmodal is now neutral-to-positive (7.5 vs 7.9 s — the
+    * r8 plan changed: pinned schemas, broadcast probe), and the theta
+    * twins are within noise. So each call site passes its measured
+    * winner.
     */
   private def withStatePartitions[T](spark: SparkSession,
       aqeOff: Boolean = false)(body: => T): T = {
@@ -115,77 +101,33 @@ object Streams {
     val prevAqe = spark.conf.get(aqeKey)
     spark.conf.set(key,
       spark.conf.get(StatePartitionsConf, StatePartitions.toString))
-    val aqe = spark.conf.get(DrainAqeConf, (!aqeOff).toString).toBoolean
-    spark.conf.set(aqeKey, aqe.toString)
+    spark.conf.set(aqeKey, (!aqeOff).toString)
     try body finally {
       spark.conf.set(key, prev)
       spark.conf.set(aqeKey, prevAqe)
     }
   }
 
-  /** Finite-drain runner for the foreachBatch twins (round-9 drain-
-    * floor result, measured by [[DrainAb]]): `Trigger.AvailableNow` +
-    * awaitTermination plans the whole staged backlog up front (one
-    * listing; batches still split by maxFilesPerTrigger, so batch
-    * composition and bids are unchanged) and terminates itself,
-    * skipping the idle progress-poll cycle `processAllAvailable` pays
-    * per drain — measured −0.2 s/twin on both a near-zero-work twin
-    * (forget 1.80→1.59 s) and a real-work one (watermark 2.02→1.83 s)
-    * at sf0.1. Default ON for these twins;
-    * [[AvailableNowConf]]=false restores the old drain. The
-    * stateful-window memory-sink twins (watermark eviction, timeout
-    * sessionization, stream-stream joins) deliberately KEEP
-    * processAllAvailable — their final-eviction semantics depend on
-    * the default trigger's extra cycle.
-    */
-  val AvailableNowConf = "spark.graft.streaming.availableNow"
-
-  /** Run independent per-batch sink writes concurrently (guide §2.6:
+  /** Run independent store-build chains concurrently (guide §2.6:
     * actions are only sequential because the driver calls them
-    * sequentially — tiny micro-batch jobs are scheduling-latency
-    * bound, so overlapping the writes lets the next job's stages
-    * back-fill the cores the current job's AQE tail leaves idle). The
-    * writers target DISTINCT per-bid directories and share only
-    * cached inputs (Spark's block manager serializes concurrent cache
+    * sequentially, so overlapping long independent jobs lets one
+    * job's stages back-fill the cores another's tail leaves idle).
+    * The writers target DISTINCT directories and share only cached
+    * inputs (Spark's block manager serializes concurrent cache
     * materialization), so ordering cannot change any output. All
     * writes complete — successfully — before this returns; the first
     * failure is rethrown unwrapped, as if the writes had run
     * sequentially.
+    *
+    * Only for long, run-once staging chains. Per-micro-batch sinks
+    * stay sequential: an interleaved A/B at `local[32]` measured the
+    * release twin at 11.8/22.5/25.2 s with the per-batch writes
+    * overlapped vs 13.6/14.8/15.0 s sequential (3-4 concurrent 32-task
+    * jobs per tiny trigger, each holding cached frames, thrash the
+    * scheduler and heap).
     */
-  val ParWritesConf = "spark.graft.streaming.parWrites"
-
-  /** Conf for overlapping the PER-MICRO-BATCH sink writes inside the
-    * release/crossmodal foreachBatch bodies — split from
-    * [[ParWritesConf]] in r14 and DEFAULT OFF. The r13 default-on was
-    * tuned on a latency-bound degraded host; re-measured at the
-    * driver's `local[32]` config (interleaved A/B, 3 cycles, fresh
-    * work dir per rep) the overlap is the instability source: release
-    * 11.8/22.5/25.2 s with batch overlap on vs 13.6/14.8/15.0 s off
-    * (same AQE-off drain), i.e. 3-4 concurrent 32-task jobs per tiny
-    * trigger each holding cached frames thrash the scheduler/heap —
-    * exactly the driver-measured r13 regression (release 12.2→50.9 s,
-    * c8/c32 ratio 0.21). The STAGING store-build chains (long,
-    * independent, run once) keep [[ParWritesConf]] default-on — §2.6
-    * back-fill works for long jobs; it loses on per-trigger
-    * micro-jobs at high core counts.
-    */
-  val ParWritesBatchConf = "spark.graft.streaming.parWritesBatch"
-
   private[streaming] def parWrites(bodies: (() => Unit)*): Unit =
-    parWritesImpl(ParWritesConf, defaultOn = true, bodies)
-
-  /** [[parWrites]] for per-micro-batch sinks — see
-    * [[ParWritesBatchConf]]; default sequential.
-    */
-  private[streaming] def parWritesBatch(bodies: (() => Unit)*): Unit =
-    parWritesImpl(ParWritesBatchConf, defaultOn = false, bodies)
-
-  private def parWritesImpl(conf: String, defaultOn: Boolean,
-      bodies: Seq[() => Unit]): Unit =
-    if (bodies.sizeIs <= 1 ||
-        !org.apache.spark.sql.SparkSession.active.conf
-          .get(conf, defaultOn.toString).toBoolean)
-      bodies.foreach(_())
+    if (bodies.sizeIs <= 1) bodies.foreach(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
       try {
@@ -200,16 +142,24 @@ object Streams {
       } finally { pool.shutdown(); () }
     }
 
-  private def drain(spark: SparkSession,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[Row]): Unit =
-    if (spark.conf.get(AvailableNowConf, "true").toBoolean) {
-      val q = w.trigger(
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try { q.awaitTermination(); () } finally q.stop()
-    } else {
-      val q = w.start()
-      try q.processAllAvailable() finally q.stop()
-    }
+  /** Finite-drain runner for the foreachBatch twins:
+    * `Trigger.AvailableNow` + awaitTermination plans the whole staged
+    * backlog up front (one listing; batches still split by
+    * maxFilesPerTrigger, so batch composition and bids are the same)
+    * and terminates itself, skipping the idle progress-poll cycle
+    * `processAllAvailable` pays per drain — measured −0.2 s/twin on
+    * both a near-zero-work twin (forget 1.80→1.59 s) and a real-work
+    * one (watermark 2.02→1.83 s) at sf0.1. The stateful-window
+    * memory-sink twins (watermark eviction, timeout sessionization,
+    * stream-stream joins) deliberately KEEP processAllAvailable —
+    * their final-eviction semantics depend on the default trigger's
+    * extra cycle.
+    */
+  private def drain(w: org.apache.spark.sql.streaming.DataStreamWriter[Row]): Unit = {
+    val q = w.trigger(
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try { q.awaitTermination(); () } finally q.stop()
+  }
 
   private def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -750,7 +700,7 @@ object Streams {
     val keptDir = s"$workDir/kept"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val hashed = batch.withColumn("h", md5(col("text")))
@@ -820,7 +770,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         // cache: consumed by bands, the estimate join, and the store
@@ -963,7 +913,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir.toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // the reference branch keys on the BATCH ID (deterministic and
@@ -1051,7 +1001,7 @@ object Streams {
     val lm = spark.read.schema("bg STRING, p DOUBLE").parquet(s"$workDir/lm")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // a micro-batch arrives as ONE staged file = one partition —
@@ -1127,7 +1077,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // per-bid overwrite: foreachBatch is at-least-once, the
@@ -1195,7 +1145,7 @@ object Streams {
       val schema = spark.read.parquet(srcDir).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      drain(spark, stream.writeStream
+      drain(stream.writeStream
         .option("checkpointLocation", s"$workDir/ckpt")
         .foreachBatch { (batch: Dataset[Row], bid: Long) =>
           // one OVERWRITTEN directory per batch id: foreachBatch is
@@ -1303,7 +1253,7 @@ object Streams {
       val schema = spark.read.parquet(srcDir).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      drain(spark, stream.writeStream
+      drain(stream.writeStream
         .option("checkpointLocation", s"$workDir/ckpt")
         .foreachBatch { (batch: Dataset[Row], bid: Long) =>
           // a micro-batch arrives as ONE staged file = one partition —
@@ -1387,7 +1337,7 @@ object Streams {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
         .where(col("doc_id") % 50 =!= 0)
-      drain(spark, stream.writeStream
+      drain(stream.writeStream
         .option("checkpointLocation", s"$workDir/ckpt")
         .foreachBatch { (batch: Dataset[Row], bid: Long) =>
           Dedup.shingleHashes(batch.toDF())
@@ -1440,21 +1390,21 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val b = batch.toDF()
         val posts = Dedup.shingleHashes(b.select(col("doc_id"), col("text")))
           .join(b.select(col("doc_id"), col("source")), Seq("doc_id"))
           .cache()
-        try parWritesBatch(
-          () => posts.groupBy(col("source"))
+        try {
+          posts.groupBy(col("source"))
             .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
               .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/sk_b$bid"),
-          () => posts.select(col("source"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/ph_b$bid"))
-        finally { posts.unpersist(); () }
+            .write.mode("overwrite").parquet(s"$workDir/sk_b$bid")
+          posts.select(col("source"), col("h")).distinct()
+            .write.mode("overwrite").parquet(s"$workDir/ph_b$bid")
+        } finally { posts.unpersist(); () }
         ()
       })
     // drain-time census: merge the per-bid sketch partials (explode +
@@ -1497,20 +1447,20 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val g = TextAnalysis.ngramHashes(
           batch.toDF().select(col("source"), col("text"))).cache()
-        try parWritesBatch(
-          () => g.groupBy(col("source"), col("n"))
+        try {
+          g.groupBy(col("source"), col("n"))
             .agg(count(lit(1)).as("total"),
               call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
                 .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/ngsk_b$bid"),
-          () => g.select(col("source"), col("n"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/ngph_b$bid"))
-        finally { g.unpersist(); () }
+            .write.mode("overwrite").parquet(s"$workDir/ngsk_b$bid")
+          g.select(col("source"), col("n"), col("h")).distinct()
+            .write.mode("overwrite").parquet(s"$workDir/ngph_b$bid")
+        } finally { g.unpersist(); () }
         ()
       })
     // drain census: totals are additive, minima re-rank (the KMV
@@ -1604,21 +1554,21 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val b = batch.toDF()
         val posts = Dedup.shingleHashes(b.select(col("doc_id"), col("text")))
           .join(b.select(col("doc_id"), col("source")), Seq("doc_id"))
           .cache()
-        try parWritesBatch(
-          () => posts.groupBy(col("source"))
+        try {
+          posts.groupBy(col("source"))
             .agg(call_function("kmv_min_k", col("h"), lit(Govern.ThetaK))
               .as("mins"))
-            .write.mode("overwrite").parquet(s"$workDir/dsk_b$bid"),
-          () => posts.select(col("source"), col("h")).distinct()
-            .write.mode("overwrite").parquet(s"$workDir/dph_b$bid"))
-        finally { posts.unpersist(); () }
+            .write.mode("overwrite").parquet(s"$workDir/dsk_b$bid")
+          posts.select(col("source"), col("h")).distinct()
+            .write.mode("overwrite").parquet(s"$workDir/dph_b$bid")
+        } finally { posts.unpersist(); () }
         ()
       })
     // drain census: staged v1 sketch ⊕ per-bid arrival partials (the
@@ -1701,7 +1651,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         batch.toDF()
@@ -1929,7 +1879,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         // one staged file = one partition — spread the shingle work
@@ -2025,21 +1975,18 @@ object Streams {
                 col("doc_id") =!= col("mb_keeper")).as("xb"),
               col("nr_hit").isNotNull.as("nr"))
           // per-bid idempotent outputs: the census partial (the SHARED
-          // aggregate — associative folds only) + both store appends.
-          // The four sinks are independent (distinct per-bid dirs, all
-          // reading the cached frames); [[parWritesBatch]] keeps them
-          // SEQUENTIAL by default — overlapping them was the r13
-          // regression at local[32] (see [[ParWritesBatchConf]]); a
-          // latency-bound deployment can turn the overlap back on.
-          parWritesBatch(
-            () => Prep.deltaCensus(flags).coalesce(1)
-              .write.mode("overwrite").parquet(s"$workDir/census_b$bid"),
-            () => vec.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/bsig_b$bid"),
-            () => batchBands.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/bband_b$bid"),
-            () => local.select(col("ch")).distinct().coalesce(1)
-              .write.mode("overwrite").parquet(s"$workDir/bhash_b$bid"))
+          // aggregate — associative folds only) + both store appends,
+          // written sequentially in this order (per-batch writes never
+          // overlap: see [[parWrites]]); store reads go through
+          // [[storesBelow]], so these appends never feed this batch
+          Prep.deltaCensus(flags).coalesce(1)
+            .write.mode("overwrite").parquet(s"$workDir/census_b$bid")
+          vec.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/bsig_b$bid")
+          batchBands.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/bband_b$bid")
+          local.select(col("ch")).distinct().coalesce(1)
+            .write.mode("overwrite").parquet(s"$workDir/bhash_b$bid")
         } finally {
           local.unpersist(); vec.unpersist(); batchBands.unpersist(); ()
         }
@@ -2123,7 +2070,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         import spark.implicits._
@@ -2179,17 +2126,15 @@ object Streams {
             .select(col("doc1"), col("doc2"))
           // per-bid stores are batch-sized (hashes + sizes, no text) —
           // coalesce so the writes don't pay 32 task launches each; at
-          // production scale these are bucketed table appends. The
-          // three sinks are independent (distinct dirs, cached
-          // inputs); [[parWritesBatch]] keeps them sequential by
-          // default (see [[ParWritesBatchConf]]).
-          parWritesBatch(
-            () => pairs.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/pairs_b$bid"),
-            () => post.coalesce(4).write.mode("overwrite")
-              .parquet(s"$workDir/post_b$bid"),
-            () => meta.coalesce(1).write.mode("overwrite")
-              .parquet(s"$workDir/meta_b$bid"))
+          // production scale these are bucketed table appends. Written
+          // sequentially, pairs first (per-batch writes never overlap:
+          // see [[parWrites]]).
+          pairs.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/pairs_b$bid")
+          post.coalesce(4).write.mode("overwrite")
+            .parquet(s"$workDir/post_b$bid")
+          meta.coalesce(1).write.mode("overwrite")
+            .parquet(s"$workDir/meta_b$bid")
         } finally { post.unpersist(); meta.unpersist(); () }
         ()
       })
@@ -2594,7 +2539,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val part = latest(batch.toDF())
@@ -2634,7 +2579,7 @@ object Streams {
       // date <= timestamp coerces date → midnight; make the cast
       // explicit for the native operator's time key (as q_asof_native)
       .withColumn("o_ts", col("o_orderdate").cast("timestamp"))
-    drain(spark, eventsStream(spark, dir)
+    drain(eventsStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"))
       .writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
@@ -2687,7 +2632,7 @@ object Streams {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    drain(spark, stream.writeStream
+    drain(stream.writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
         val partial = batch.groupBy(col("event_type"))

@@ -1,26 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-query stage-level profiler (optimization-round measurement
   * harness): runs a named SparkEntry query through the bench's noop
   * materialization with a stage listener and prints the slowest
   * stages (wall, tasks, executor run time, shuffle write) with their
   * call sites. Usage:
   * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ProfileQuery q_x [q_y ...]"`.
+  * A `conf:k=v` argument sets a session conf for every query after
+  * it, and a repeated name is a repetition, so an interleaved A/B of a
+  * conf arm is `q_x conf:k=a q_x conf:k=b q_x`.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.bench("graft-profile")
     spark.sparkContext.setLogLevel("WARN")
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Int, Long, Long)]()
     spark.sparkContext.addSparkListener(

@@ -2275,10 +2275,12 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset(SpanExact.SpanSaMaxLenConf)
   }
 
-  test("q_dup_spectrum: bands and shares on the crafted span corpus") {
+  /** The crafted span corpus (the span-exact fixture geometry): docs
+    * 1/2 share a 12-token run, doc 3 all-unique, doc 4 repeats 4
+    * tokens internally. Every doc fits the smallest horizon (128).
+    */
+  private def spanFixtureDir(): String = {
     import spark.implicits._
-    // reuse the span-exact fixture geometry: docs 1/2 share a 12-token
-    // run, doc 3 all-unique, doc 4 repeats 4 tokens internally
     val run = (1 to 12).map(i => s"R$i").mkString(" ")
     val docs = Seq(
       (1L, s"u1 u2 u3 u4 $run v1 v2 v3 v4"),
@@ -2287,6 +2289,29 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
       (4L, "y1 y2 y3 y4 y1 y2 y3 y4")).toDF("doc_id", "text")
     val out = Files.createTempDirectory("dup_spectrum_fix").toString
     docs.write.parquet(s"$out/documents.parquet")
+    out
+  }
+
+  test("q_span_dedup_exact: same census at horizons 128, 512 and 1024 on short docs") {
+    // extra doubling rounds only relabel already-separated ranks, so on
+    // a corpus whose docs all fit the smallest horizon the census must
+    // not move (the Scratch keys embed the horizon: each builds afresh)
+    val out = spanFixtureDir()
+    def census(h: Int): Seq[String] = {
+      spark.conf.set(SpanExact.SpanSaMaxLenConf, h.toString)
+      SpanExact.queries("q_span_dedup_exact")(spark, out)
+        .collect().map(_.toString).toSeq.sorted
+    }
+    try {
+      val base = census(128)
+      assert(base.nonEmpty)
+      for (h <- Seq(512, 1024))
+        assert(census(h) == base, s"census at horizon $h differs from 128")
+    } finally spark.conf.unset(SpanExact.SpanSaMaxLenConf)
+  }
+
+  test("q_dup_spectrum: bands and shares on the crafted span corpus") {
+    val out = spanFixtureDir()
     val r = SpanExact.queries("q_dup_spectrum")(spark, out)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     // per-position longest-match lengths, worked by hand:
